@@ -673,9 +673,10 @@ def connected_components(
         # Convergence probe reads the CHECKPOINTED rows (the old label
         # rides along as __old), so it costs a scan, not the extra
         # labels-to-labels join a separate old-vs-new compare would.
-        changed = (
-            new_labels.filter(F.col("comp") != F.col("__old")).limit(1).count()
-        )
+        # A full count, not limit(1): Spark names each limit's
+        # generated counter from a JVM-wide sequence, so a limit probe
+        # is new code that recompiles on every iteration and run.
+        changed = new_labels.filter(F.col("comp") != F.col("__old")).count()
         labels.unpersist()
         labels = new_labels.select("id", "comp")
         if changed == 0:

@@ -180,6 +180,16 @@ _MOR_ADD_TARGET_ROWS = 4_000_000
 _MOR_ADD_MAX_FILES = 256
 
 
+def _has_rows(df: DataFrame) -> bool:
+    """Whether ``df`` holds a row, in one job. The write-path guards
+    and rebase probes this serves expect an empty answer, which a
+    ``limit(1)`` probe scans in full too. Not ``limit(1)``: Spark
+    names each limit's generated row counter from a JVM-wide sequence
+    (``_limit_counter_<n>``), so every probe plan is new code and
+    recompiles on every call, warm or not."""
+    return df.count() > 0
+
+
 class _NanKeySentinel:
     """Singleton stand-in for float NaN change-feed keys: dict lookups
     on raw NaN never match (NaN != NaN), but the batch feed's xxhash64
@@ -1951,10 +1961,7 @@ class TxTable:
         CHECK semantics: NULL evaluations PASS (only a definite FALSE
         violates) — coalesce(expr, true)."""
         for name, expr in exprs.items():
-            bad = df.filter(
-                ~F.coalesce(F.expr(expr), F.lit(True))
-            ).limit(1).count()
-            if bad:
+            if _has_rows(df.filter(~F.coalesce(F.expr(expr), F.lit(True)))):
                 return name
         return None
 
@@ -2312,11 +2319,9 @@ class TxTable:
                 names.append(f)
             if not names:
                 return False
-            return bool(
+            return _has_rows(
                 self._read_files(names)
                 .join(F.broadcast(keys), key, "left_semi")
-                .limit(1)
-                .count()
             )
 
         return self._commit_rebase(
@@ -2506,7 +2511,8 @@ class TxTable:
             mk = matched.groupBy(key).agg(
                 F.count(F.lit(1)).alias("__nm")
             ).localCheckpoint(eager=False)
-            if mk.limit(1).count() == 0:
+            n_keys = mk.count()
+            if n_keys == 0:
                 return v  # no-op deletes don't burn a version
             # NULL-key guard, mirroring merge_upsert's: an equality
             # delete never matches a NULL key (the read-side anti-join
@@ -2514,7 +2520,7 @@ class TxTable:
             # drops the null group too), so a matched NULL-key row
             # would silently survive every read while the call reports
             # success (r8 advisor finding). Refuse loudly.
-            if mk.filter(F.col(key).isNull()).limit(1).count():
+            if _has_rows(mk.filter(F.col(key).isNull())):
                 raise ValueError(
                     f"delete_where(mode='mor'): matched row(s) carry a "
                     f"NULL key '{key}' — equality deletes cannot erase "
@@ -2529,7 +2535,7 @@ class TxTable:
                 .groupBy(key, "__nm")
                 .agg(F.count(F.lit(1)).alias("__nt"))
             )
-            if tot.filter(F.col("__nt") > F.col("__nm")).limit(1).count():
+            if _has_rows(tot.filter(F.col("__nt") > F.col("__nm"))):
                 raise ValueError(
                     f"delete_where(mode='mor'): a matched key in "
                     f"'{key}' also has rows NOT matching the predicate "
@@ -2541,7 +2547,7 @@ class TxTable:
             # candidate pruning and vacuum's key scoping cheap
             nf = max(1, min(
                 _MOR_ADD_MAX_FILES,
-                -(-mk.count() // _MOR_ADD_TARGET_ROWS),
+                -(-n_keys // _MOR_ADD_TARGET_ROWS),
             ))
             # the delete-file payload IS mk's key set — deriving it
             # from the checkpointed aggregate instead of
@@ -2566,12 +2572,8 @@ class TxTable:
                 if not names:
                     return False
                 got = self._read_files(names)
-                if got.filter(condition).limit(1).count():
-                    return True
-                return bool(
+                return _has_rows(got.filter(condition)) or _has_rows(
                     got.join(F.broadcast(dkeys), key, "left_semi")
-                    .limit(1)
-                    .count()
                 )
 
             return self._commit_rebase(
@@ -2616,9 +2618,7 @@ class TxTable:
             names = [f for f, _ in entries]
             if not names:
                 return False
-            return bool(
-                self._read_files(names).filter(condition).limit(1).count()
-            )
+            return _has_rows(self._read_files(names).filter(condition))
 
         return self._commit_rebase(
             v, adds, touched, "delete",
@@ -2752,9 +2752,7 @@ class TxTable:
             names = [f for f, _ in entries]
             if not names:
                 return False
-            return bool(
-                self._read_files(names).filter(condition).limit(1).count()
-            )
+            return _has_rows(self._read_files(names).filter(condition))
 
         return self._commit_rebase(
             v, adds, touched, "update",
